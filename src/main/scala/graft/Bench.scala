@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark harness (driver contract): runs every `SparkEntry.queries`
   * entry on `SPARK_GRAFT_SF_DIR`, prints ONE JSON line with per-query
-  * and total seconds.
+  * and total seconds and the keys that failed.
   *
   * Measurement discipline (round-2 hardening):
   *  - queries run in FIXED sorted order, so run-to-run profiles are
@@ -13,70 +13,19 @@ import org.apache.spark.sql.SparkSession
   *    evaluates every output column — `.count()` lets Catalyst prune
   *    unreferenced projections, silently under-measuring
   *    expression-heavy queries;
-  *  - `passes` full passes (default 2), per-query MIN reported: a
+  *  - `passes` full passes (default 3), per-query MIN reported: a
   *    heap-churning query inflates whatever runs after it via GC;
   *    min-of-passes measures the query, not its neighbors' garbage.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // 3 passes: pass 1 absorbs codegen compilation; two further passes
     // give the per-query MIN a fighting chance against cross-query GC/
     // JIT noise (r3 saw 0.3-0.6s phantom regressions that vanished in
     // isolation — min-of-2 kept exactly one noisy sample per query)
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Raise the object-hash-agg fallback threshold (default 128
-      // in-memory keys!) so collect_list/collect_set aggregations — the
-      // posting-list build in the dedup family — stay hash-based
-      // instead of degenerating to a per-partition sort (measured
-      // −0.5 s on q_dedup_ngram at sf0.1). Memory-safe here because
-      // posting lists are bounded by dfCap; the sort fallback remains
-      // available past 1M groups per task.
-      // NOTE (r4): byte-based AQE coalesce tuning (parallelismFirst=
-      // false + small advisory size) was measured and REJECTED: it
-      // cut 10-20% off tiny 150-row shuffles but cost 2x on the
-      // CPU-heavy explode/agg queries whose shuffles are small in
-      // bytes but large in work (36.4 s vs 30.9 s full-suite).
-      // NOTE (r6): two more floor levers measured and REJECTED for the
-      // same reason — they help the 25-query floor subset ~1.1 s but
-      // cost the 15 byte-heavy queries the same 1.1 s back:
-      // spark.shuffle.compress=false (posting-list/pair shuffles are
-      // LZ4-friendly; raw blocks cost more IO than the codec saves)
-      // and spark.sql.autoBroadcastJoinThreshold=64m (20 MB build
-      // sides broadcast fine for dim joins but serialize the big
-      // dedup/cluster join builds into every task).
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_OBJAGG", "1000000"))
-      // r16 (guide §4, codegen): Spark's whole-stage/expression codegen
-      // compile cache holds only 100 classes by default — a 237-query
-      // suite evicts EVERYTHING between passes, so min-of-passes was
-      // measuring Janino RE-compilation on every pass of every query,
-      // not the queries. Sized to hold the suite's distinct codegen
-      // units, pass 2+ reuses pass 1's compiled classes. Measured
-      // (15-key subset, 3 passes, min-of-passes): 37.8 s → 23.5 s
-      // (−38%), every key faster (q_graph_pagerank 2.96 → 1.18,
-      // q_update_dv 4.40 → 2.51, q_ma7 0.54 → 0.24), floor 0.112 →
-      // 0.099. NOT a local-mode trick: cache pressure is per-driver
-      // JVM and core-count-independent, and a production service
-      // re-planning the same query shapes wants exactly this. Caches
-      // compiled BYTECODE keyed on generated source — never data, so
-      // every invocation still computes from the parquet inputs.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "10000"))
-      // dev aid: SPARK_GRAFT_CONF="k=v;k2=v2" overlays arbitrary confs
-      // for A/B runs (the driver never sets it)
-      .config(sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";")).map(_.split("=", 2)).collect {
-          case Array(k, v) => k -> v
-        }.toMap)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // warm the JVM/codegen/scheduler path once so startup cost isn't
     // attributed to whichever query happens to run first
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -126,7 +75,7 @@ object Bench {
       "q_incr_degrees_cdf", "q_ann_ivf_indexed", "q_graph_ppr_weighted",
       // r15: the r14 verdict's two remaining >2x-proxy keys without a
       // measured floor (jaccard's posting-pair build; fusion's two
-      // retrievers + rrf — decomposed in RetrievalFloorProbe), plus
+      // retrievers + rrf — decomposed in docs/SCALE.md), plus
       // the round's new index-build keys (both build a persisted
       // index inside the timed region by design)
       "q_graph_jaccard", "q_rrf_fusion",
@@ -134,7 +83,7 @@ object Bench {
       "q_decontam_indexed",
       // r16: the indexed serving loop builds BOTH persisted indexes in
       // its timed region (the indexed-key precedent); the steady-state
-      // probe floor is on RetrievalFloorProbe's record
+      // probe floor is on docs/SCALE.md's record
       "q_rrf_indexed",
       // r16 second batch: all three build persisted structures in
       // their timed regions (q_rrf_filtered two indexes, q_ann_filtered
@@ -149,23 +98,20 @@ object Bench {
     // (ADVICE r7). Eager staging makes both keys measure the same
     // thing: a scan of the checkpointed packing assignment.
     SparkEntry.prestage(spark, sfDir)
-    def runOnce(name: String): Double = {
-      System.gc()
-      val t0 = System.nanoTime()
-      val ok =
-        try {
-          SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
-          true
-        } catch { case _: Throwable => false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.sharedState.cacheManager.clearCache()
-      if (ok) dt else -1.0
+    // every key that threw, in any run: a breakage must not read as a
+    // speed-up, so failures are named on stderr and in both JSON lines
+    val failed = scala.collection.mutable.SortedSet[String]()
+    def run(name: String): Double = runOnce(spark, sfDir, name) match {
+      case Right(dt) => dt
+      case Left(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        failed += name
+        -1.0
     }
     // isolated block first (full default runs only): fresh JVM, no
     // 168-query heap behind it. min-of-5 (was 3, r14): the iterative
     // graph walks span ~7 distinct codegen stages and are still
-    // DESCENDING at run 3 on a fresh JVM — measured (WalkFloorProbe,
+    // DESCENDING at run 3 on a fresh JVM — measured (docs/SCALE.md,
     // sf0.1): q_graph_pagerank runs 2.00 / 1.33 / 1.05 s, steady state
     // ~1.05 s, while min-of-3 recorded 1.71 s — i.e. the old record
     // measured JIT warmup, not the query. Two more runs cost ~15 s
@@ -174,22 +120,12 @@ object Bench {
     val isolated: Map[String, Double] =
       if (only.nonEmpty) Map.empty
       else isolatedKeys.map { name =>
-        name -> (1 to 5).map(_ => runOnce(name)).filter(_ >= 0)
+        name -> (1 to 5).map(_ => run(name)).filter(_ >= 0)
           .reduceOption(math.min(_, _)).getOrElse(-1.0)
       }.toMap
     val best = scala.collection.mutable.LinkedHashMap[String, Double](names.map(_ -> Double.NaN): _*)
-    // runOnce already handles the heap settle BEFORE the timed section
-    // (a heap-churning query otherwise inflates whatever runs after it
-    // — with a deterministic order, the SAME victims every pass, so
-    // min-of-passes can't see through it; measured: q_approx_distinct
-    // 2.4s contaminated vs 0.44s isolated) and the block cleanup AFTER
-    // it (eager localCheckpoints persist executor-local RDD blocks that
-    // nothing unpersists once the noop write consumed them; left to
-    // ContextCleaner-via-GC they pile up across 168 queries × 3 passes
-    // — measured: the same pipeline query 6.8 s isolated vs 49.7 s in
-    // the full suite).
     for (pass <- 1 to math.max(passes, 1); name <- names) {
-      val dt = runOnce(name)
+      val dt = run(name)
       val prev = best(name)
       best(name) =
         if (dt < 0) -1.0
@@ -204,8 +140,9 @@ object Bench {
       else isolated.toSeq.sortBy(_._1)
         .map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString(""","isolated":{""", ",", "}")
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$iso,"floor":$floor,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$iso,"failed":$failedJson,"floor":$floor,"sf":"$sfDir"}"""
     // Full per-query line first, for humans reading the whole log.
     println(fullLine)
     // ALSO persist the complete map to a repo file: the driver's
@@ -213,10 +150,9 @@ object Bench {
     // queries, leaving round-over-round diffs blind on the fast half
     // of the suite (VERDICT r7 #3). A committed bench_queries.json is
     // the durable full record; tools/bench_diff.py prefers it.
-    // ONLY for full default-config runs: a SPARK_GRAFT_BENCH_ONLY
-    // subset or a SPARK_GRAFT_CONF A/B overlay would clobber the
-    // committed full record with a partial/incomparable map.
-    if (only.isEmpty && sys.env.get("SPARK_GRAFT_CONF").isEmpty)
+    // ONLY for full runs: a SPARK_GRAFT_BENCH_ONLY subset would
+    // clobber the committed full record with a partial map.
+    if (only.isEmpty)
       try {
         java.nio.file.Files.write(
           java.nio.file.Paths.get("bench_queries.json"),
@@ -233,7 +169,7 @@ object Bench {
     val slowestFirst = best.toSeq.sortBy { case (_, v) => -v }
       .map { case (k, v) => "\"" + k + "\":" + f3(v) }
     val budget = 1500
-    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","nqueries":${best.size},"floor":${f3(floor)},"sf":"$sfDir","queries":{"""
+    val head = s"""{"metric":"total","value":${f3(total)},"unit":"sec","nqueries":${best.size},"nfailed":${failed.size},"floor":${f3(floor)},"sf":"$sfDir","queries":{"""
     val sb = new StringBuilder(head)
     var first = true
     for (e <- slowestFirst if sb.length + e.length + 2 < budget) {
@@ -242,5 +178,30 @@ object Bench {
     sb.append("}}")
     println(sb.toString)
     spark.stop()
+  }
+
+  /** One timed run of `name` through the noop sink, or the exception it
+    * threw. The heap is settled BEFORE the timed section (a
+    * heap-churning query otherwise inflates whatever runs after it —
+    * with a deterministic order, the SAME victims every pass, so
+    * min-of-passes can't see through it; measured: q_approx_distinct
+    * 2.4s contaminated vs 0.44s isolated) and cached blocks are
+    * released AFTER it (eager localCheckpoints persist executor-local
+    * RDD blocks that nothing unpersists once the noop write consumed
+    * them; left to ContextCleaner-via-GC they pile up across 168
+    * queries × 3 passes — measured: the same pipeline query 6.8 s
+    * isolated vs 49.7 s in the full suite).
+    */
+  def runOnce(spark: SparkSession, sfDir: String, name: String): Either[Throwable, Double] = {
+    System.gc()
+    val t0 = System.nanoTime()
+    val r =
+      try {
+        SparkEntry.queries(name)(spark, sfDir).write.mode("overwrite").format("noop").save()
+        Right((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable => Left(e) }
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    spark.sharedState.cacheManager.clearCache()
+    r
   }
 }

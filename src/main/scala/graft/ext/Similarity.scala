@@ -625,8 +625,8 @@ object Similarity {
     // from coalescing the 8M-row window stage back to one partition.
     // Fold bits are untouched: every (i,j) group still lands whole in
     // one partition and the window still adds in vec_id order —
-    // A/B'd bit-identical (PcaProbe), and max_by on vec_id (unique per
-    // group) replaces the row_number twin window function.
+    // pinned bit-identical by SimilaritySpec, and max_by on vec_id
+    // (unique per group) replaces the row_number twin window function.
     val dp = spark.sparkContext.defaultParallelism
     val gRows = centered.repartition(dp, col("vec_id")).as("a")
       .join(centered.as("b"), col("a.vec_id") === col("b.vec_id"))

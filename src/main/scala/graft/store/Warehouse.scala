@@ -1947,31 +1947,6 @@ object Warehouse {
     sys.error("unreachable")
   }
 
-  /** STREAMING UPSERT SINK — the Delta "streaming MERGE via
-    * foreachBatch" pattern as a first-class sink: each micro-batch
-    * (e.g. a CDC feed, a dedup-keyed event stream) MERGEs into the
-    * table file-grain ([[mergeIntoSnapshot]]: only files holding the
-    * batch's keys rewrite), exactly-once via the same manifest-carried
-    * (appId, epoch) gate as [[writeSnapshotStream]]. The standard
-    * clause set for at-least-once upsert streams is update-all +
-    * insert-all; pass a delete clause for tombstone-bearing feeds.
-    */
-  def writeSnapshotMergeStream(source: DataFrame, path: String, checkpoint: String,
-                               appId: String, keys: Seq[String],
-                               clauses: Seq[MergeClause],
-                               changeFeed: Boolean = false,
-                               maintainEvery: Int = 0,
-                               maintainPolicy: MaintenancePolicy = MaintenancePolicy())
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, epoch: Long) =>
-        commitStreamMerge(batch, path, appId, epoch, keys, clauses, changeFeed)
-        if (maintainEvery > 0 && epoch % maintainEvery == maintainEvery - 1)
-          maintainTickBestEffort(batch.sparkSession, path, maintainPolicy, epoch)
-        ()
-      }
-
   /** REPLICA APPLY — close the CDC loop: take the recorded change feed
     * of `src` for versions `fromVersion..toVersion` and apply it to
     * `dst` as ONE file-grain merge, so a downstream replica catches up

@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SourceHygieneSpec extends AnyFunSuite {
 
-  private def mainSources: Seq[(String, String)] = {
-    val root = java.nio.file.Paths.get("src/main/scala")
+  private def mainSources: Seq[(String, String)] = sources("src/main/scala")
+
+  private def sources(dir: String): Seq[(String, String)] = {
+    val root = java.nio.file.Paths.get(dir)
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
@@ -29,5 +31,20 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     }
     assert(hits.isEmpty, s"wide-decimal sum buffers found — use ExactSums:\n${hits.mkString("\n")}")
+  }
+
+  test("one session factory: sessions are built only in GraftSession.scala") {
+    // every session is built by graft.GraftSession, so the bench, the
+    // verifier, the specs and the probes all run one engine config
+    // (perfbench/ keeps its own session: it is the benchmark's build)
+    val re = """SparkSession\s*\.\s*builder""".r
+    val hits = (sources("src/main/scala") ++ sources("src/test/scala"))
+      .filterNot { case (path, _) => path.endsWith("/GraftSession.scala") }
+      .flatMap { case (path, text) =>
+        text.linesIterator.zipWithIndex.collect {
+          case (line, i) if re.findFirstIn(line).isDefined => s"$path:${i + 1}: ${line.trim}"
+        }
+      }
+    assert(hits.isEmpty, s"build sessions through GraftSession.build:\n${hits.mkString("\n")}")
   }
 }

@@ -192,6 +192,30 @@ class SimilaritySpec extends SparkSpec {
     assert(load.toSeq === again.toSeq, "bit-deterministic across runs")
   }
 
+  test("pcaPowerTop: the fanned Gramian equals the single-partition ordered fold, bit for bit") {
+    // the keyed repartitions in front of the Gramian window must leave
+    // every (i,j) sum folded whole and in vec_id order; the reference
+    // here is that fold run sequentially on the driver
+    val d = 6
+    val iters = 6
+    val vecs = (1 to 120).map(i =>
+      (i.toLong, (0 until d).map(j => math.sin(i * 0.37 + j * 1.3) + 0.1 * j)))
+    val df = vecs.toDF("vec_id", "embedding").repartition(4)
+    val xs = vecs.map(_._2.toArray)
+    val m = Array.tabulate(d)(p => xs.foldLeft(0.0)((acc, x) => acc + x(p)) / xs.size)
+    val c = xs.map(x => Array.tabulate(d)(p => x(p) - m(p)))
+    val g = Array.tabulate(d, d)((i, j) => c.foldLeft(0.0)((acc, v) => acc + v(i) * v(j)))
+    var x = Array.fill(d)(1.0)
+    for (_ <- 1 to iters) {
+      val y = Array.tabulate(d)(i => (0 until d).foldLeft(0.0)((acc, j) => acc + g(i)(j) * x(j)))
+      val nrm = math.sqrt(y.foldLeft(0.0)((acc, v) => acc + v * v))
+      x = y.map(_ / nrm)
+    }
+    val got = Similarity.pcaPowerTop(df, iters).orderBy("pos").collect().map(_.getDouble(1))
+    assert(got.toSeq.map(java.lang.Double.doubleToRawLongBits) ===
+      x.toSeq.map(java.lang.Double.doubleToRawLongBits))
+  }
+
   test("ivfTopK: reasonable recall vs brute force, exact sims for returned pairs") {
     val e = graft.Tables.embeddings(spark, "/root/testdata/sf0.001")
     val q = e.filter(col("vec_id") < 5)

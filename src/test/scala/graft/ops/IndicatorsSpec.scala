@@ -118,6 +118,36 @@ class IndicatorsSpec extends SparkSpec {
     assert(out(3).getDouble(out.head.schema.fieldIndex("med4")) === 2.5)
   }
 
+  test("rollingMedian: the keyed repartition changes no bit (row-identical to the plain window)") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions._
+    // six assets spread over five input partitions, so the keyed
+    // repartition in front of the window really moves rows
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0)
+    val prices = (for (a <- 0 until 6; i <- 0 until 50) yield (
+        java.sql.Timestamp.valueOf(t0.plusHours(i)), s"A$a",
+        100.0 + a + 3 * math.sin(i * 0.7 + a) + i * 1e-3))
+      .toDF("ts_utc", "asset", "price").repartition(5)
+    def bits(df: DataFrame) = df.collect().map { r =>
+      (r.getTimestamp(0).getTime, r.getString(1),
+        if (r.isNullAt(2)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+    }.sorted.toSeq
+    for (window <- Seq(7, 8)) {
+      val w = Window.partitionBy("asset").orderBy("ts_utc").rowsBetween(-(window - 1), 0)
+      val s = col("__sorted")
+      val med =
+        if (window % 2 == 1) element_at(s, (window + 1) / 2)
+        else (element_at(s, window / 2) + element_at(s, window / 2 + 1)) / 2.0
+      val plain = prices
+        .select(col("ts_utc"), col("asset"), array_sort(collect_list(col("price")).over(w)).as("__sorted"))
+        .select(col("ts_utc"), col("asset"), when(size(s) === window, round(med, 6)))
+      val got = bits(Indicators.rollingMedian(prices, window))
+      assert(got.size === 300 && got.count(_._3.isDefined) === 6 * (50 - window + 1))
+      assert(got === bits(plain), s"window $window")
+    }
+  }
+
   // ---- recursive indicator family (SeededEwma window function) ----
 
   /** Two-asset daily OHLC fixture, 40 rows each, deterministic. */

@@ -1,7 +1,8 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, Tables}
+import graft.store.{Ivm, Warehouse}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 10× scale probe — ad-hoc main, not part of the driver contract.
@@ -13,29 +14,28 @@ import org.apache.spark.sql.functions._
   * the exponent, not the absolute numbers: linear-ish growth means the
   * shape survives scale; superlinear growth shows where the dfCap /
   * banding / blocking guards must take over.
+  *
+  * Usage: `sbt "Test/runMain graft.tools.ScaleProbe [K]"`, optionally
+  * scoped to one section with `GRAFT_PROBE_ONLY=<section>`.
   */
 object ScaleProbe {
-  def time(label: String)(f: => Long): Unit = {
+  def time[T](label: String)(f: => T): T = {
     System.gc()
     val t0 = System.nanoTime()
-    val n = f
-    println(f"[scale] $label%-46s ${(System.nanoTime() - t0) / 1e9}%7.2f s  ($n rows)")
+    val r = f
+    println(f"[scale] $label%-52s ${(System.nanoTime() - t0) / 1e9}%7.2f s  (-> $r)")
+    r
   }
 
   /** GRAFT_PROBE_ONLY=<name> scopes a run to one section (dedup,
-    * fuzzy, writes, skew, ann, graph) — the full probe is ~15 min and
-    * a new family's exponent shouldn't cost re-measuring the rest. */
+    * fuzzy, writes, skew, ann, graph, sketch, ndv, erase, dv, merge) —
+    * the full probe is ~15 min and a new family's exponent shouldn't
+    * cost re-measuring the rest. */
   private def section(name: String)(body: => Unit): Unit =
     if (sys.env.get("GRAFT_PROBE_ONLY").forall(_ == name)) body
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.build()
     val dir = "/root/testdata/sf0.1"
     val k = args.headOption.map(_.toInt).getOrElse(10)
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -111,7 +111,6 @@ object ScaleProbe {
     val evK = (0 until k).map(i =>
         ev1.withColumn("event_id", col("event_id") + lit(i * maxEv)))
       .reduce(_ unionByName _).localCheckpoint(true)
-    import graft.store.Warehouse
     for ((label, t) <- Seq("1x" -> ev1, s"${k}x" -> evK)) {
       // batch: update 1% of keys, insert 1% new — every row on ONE day
       val batch = t.filter(col("event_id") % 100 === 0)
@@ -343,7 +342,6 @@ object ScaleProbe {
     // (AnalyzeSpec's poison pins: corrupt every data file, the answer
     // still returns). The probe stays as the regression tripwire for
     // the side-table read path itself.
-    import graft.store.Warehouse
     val ev1 = Tables.events(spark, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     val maxEv = ev1.agg(max(col("event_id"))).head().getLong(0) + 1
@@ -367,6 +365,161 @@ object ScaleProbe {
           Warehouse.readSnapshot(spark, root).withColumn("g", lit(1)),
           Seq("g"), "user_id", 256).count()
       }
+    }
+    }
+    // The commit-path ladders (r10/r11) run on a synthetic 2M-row base
+    // (≈100 MB parquet with the md5 payload) so at K× scan and rewrite
+    // costs dominate the fixed floor; sf0.1 events (100k rows) is
+    // job-overhead-dominated.
+    val base = 2000000L
+    def idTable(n: Long) = spark.range(n).toDF("id")
+      .withColumn("g", pmod(col("id") * 7919, lit(1000)))
+      .withColumn("v", col("id") % 97)
+      .withColumn("payload", md5(col("id").cast("string")))
+    // a warm-up lane first, as in the sketch and ndv sections: the 1x
+    // numbers otherwise carry JVM/codegen warm-up and invert the ladder
+    def ladder(prefix: String)(body: (String, Long, String) => Unit): Unit = {
+      val tmp = java.nio.file.Files.createTempDirectory(prefix).toString
+      for ((label, n) <- Seq("warmup" -> base, "1x" -> base, s"${k}x" -> base * k))
+        body(label, n, s"$tmp/t_$label")
+    }
+
+    section("erase") {
+    // SCALE.md "Row-level deletes never rewrite the table": deleteWhere
+    // costs a column-pruned discovery scan plus a rewrite bounded by the
+    // TOUCHED files, a scanBound on a clustered table prunes discovery to
+    // stat-overlapping files, and compactSnapshot is the whole-table
+    // rewrite a partition-overwrite erase would pay
+    ladder("graft_erase") { (label, n, root) =>
+      val t = spark.range(n).toDF("event_id")
+        .withColumn("user_id", pmod(col("event_id") * 7919, lit(50000)))
+        .withColumn("payload", md5(col("event_id").cast("string")))
+        .localCheckpoint(true)
+      // user_id-clustered layout (1-D z-order = range clustering), so
+      // manifest stats are tight on the erase key
+      time(s"snapshot write, user-clustered ($label)") {
+        Warehouse.writeSnapshot(graft.ops.Layout.zorder(t, Seq("user_id"), 32), root)
+      }
+      val victims = t.select("user_id").distinct().orderBy("user_id")
+        .limit(5).collect().map(_.getLong(0))
+      def bound(i: Int) = Some(("user_id", Some(victims(i)), Some(victims(i))))
+      time(s"deleteWhere, unbounded discovery ($label)") {
+        Warehouse.deleteWhere(spark, root, col("user_id") === victims(0))
+      }
+      time(s"deleteWhere, scanBound candidates ($label)") {
+        Warehouse.deleteWhere(spark, root, col("user_id") === victims(1), scanBound = bound(1))
+      }
+      // deletion vectors: the same erase with no file rewritten
+      time(s"deleteWhereDv, unbounded discovery ($label)") {
+        Warehouse.deleteWhereDv(spark, root, col("user_id") === victims(2))
+      }
+      time(s"deleteWhereDv, scanBound candidates ($label)") {
+        Warehouse.deleteWhereDv(spark, root, col("user_id") === victims(3), scanBound = bound(3))
+      }
+      // the merge-on-read tax: a full-scan count with the position
+      // anti-join live, vs after the purge materializes it away
+      time(s"full read count, dv live ($label)")(Warehouse.readSnapshot(spark, root).count())
+      time(s"materializeDeletes, file-grain purge ($label)") {
+        Warehouse.materializeDeletes(spark, root).map(_._1).getOrElse(0L)
+      }
+      time(s"full read count, post-purge ($label)")(Warehouse.readSnapshot(spark, root).count())
+      time(s"compactSnapshot, full rewrite ref ($label)")(Warehouse.compactSnapshot(spark, root)._1)
+    }
+    }
+
+    section("dv") {
+    // r11 merge-on-read and maintenance: dv delete/update write a k-row
+    // sidecar, flat in table size, where the file-grain forms rewrite
+    // the touched files; refreshIndexSnapshot after a small append costs
+    // the new file while the full rebuild grows linearly;
+    // snapshotExtremes answers from the manifest; replaceWhere of one
+    // clustered slice costs that slice's files
+    ladder("graft_dvp") { (label, n, root) =>
+      val t = idTable(n).localCheckpoint(true)
+      time(s"snapshot write, id-clustered ($label)") {
+        Warehouse.writeSnapshot(t.repartitionByRange(32, col("id")), root)
+      }
+      // 400 rows scattered over every file (id % 5000)
+      time(s"deleteWhereDv, scattered rows ($label)") {
+        Warehouse.deleteWhereDv(spark, root, col("id") % 5000L === 3L)
+      }
+      time(s"deleteWhere file-grain reference ($label)") {
+        Warehouse.deleteWhere(spark, root, col("id") % 5000L === 7L)
+      }
+      time(s"updateWhereDv, scattered rows ($label)") {
+        Warehouse.updateWhereDv(spark, root, col("id") % 5000L === 11L, Map("v" -> lit(-1L)))
+      }
+      time(s"updateWhere file-grain reference ($label)") {
+        Warehouse.updateWhere(spark, root, col("id") % 5000L === 13L, Map("v" -> lit(-2L)))
+      }
+      time(s"indexSnapshot full build ($label)")(Warehouse.indexSnapshot(spark, root, "payload"))
+      Warehouse.appendSnapshot(idTable(1000).withColumn("id", col("id") + n), root,
+        Warehouse.currentSnapshot(spark, root))
+      time(s"refreshIndexSnapshot after 1k-row append ($label)") {
+        Warehouse.refreshIndexSnapshot(spark, root)
+      }
+      time(s"indexSnapshot full rebuild reference ($label)") {
+        Warehouse.indexSnapshot(spark, root, "payload")
+      }
+      time(s"snapshotExtremes (manifest, dv-aware) ($label)") {
+        Warehouse.snapshotExtremes(spark, root, "id").collect().length
+      }
+      time(s"direct min/max aggregate reference ($label)") {
+        Warehouse.readSnapshot(spark, root).agg(min("id"), max("id")).collect().length
+      }
+      val sliceHi = n / 32 // one clustered slice, ~1/32 of the table
+      time(s"replaceWhere one clustered slice ($label)") {
+        Warehouse.replaceWhere(spark, root, col("id") < sliceHi,
+          idTable(1000).filter(col("id") < sliceHi),
+          scanBound = Some(("id", Some(0L), Some(sliceHi))))
+      }
+    }
+    }
+
+    section("merge") {
+    // r11 write paths: a fixed-size mergeIntoSnapshot batch costs a
+    // key-column discovery scan plus a rewrite bounded by the files its
+    // keys live in (near-flat on a key-clustered table, flat with a
+    // scanBound) where the full-rewrite merge grows linearly; IVM
+    // catches a rollup up at a cost proportional to the feed
+    val clauses = Seq(
+      Warehouse.UpdateWhen(lit(true), Map("v" -> col("s.v"))),
+      Warehouse.InsertWhen(lit(true)))
+    ladder("graft_mip") { (label, n, root) =>
+      val t = idTable(n).localCheckpoint(true)
+      time(s"snapshot write, id-clustered ($label)") {
+        Warehouse.writeSnapshot(t.repartitionByRange(32, col("id")), root)
+      }
+      // fixed-size batch: 10k keys clustered in one id range + 1k inserts
+      val b = spark.range(0, 10000).toDF("id").union(spark.range(n, n + 1000).toDF("id"))
+        .withColumn("g", lit(7L)).withColumn("v", lit(-1L)).withColumn("payload", lit("x"))
+        .localCheckpoint(true)
+      time(s"mergeIntoSnapshot, unbounded discovery ($label)") {
+        Warehouse.mergeIntoSnapshot(spark, root, b, Seq("id"), clauses)
+      }
+      // the bound covers the MATCHED keys only (ids 0..10000); insert
+      // keys touch no existing file and are exempt from the contract
+      time(s"mergeIntoSnapshot, scanBound discovery ($label)") {
+        Warehouse.mergeIntoSnapshot(spark, root, b.withColumn("v", lit(-2L)), Seq("id"),
+          clauses, scanBound = Some(("id", Some(0L), Some(10000L))))
+      }
+      // what a merge without file-grain machinery pays: read all,
+      // merge, rewrite all
+      time(s"full-rewrite merge reference ($label)") {
+        val merged = Warehouse.mergeInto(Warehouse.readSnapshot(spark, root), b, Seq("id"), clauses)
+        Warehouse.commitSnapshot(merged, root, Warehouse.currentSnapshot(spark, root))
+      }
+      def rollup = Warehouse.readSnapshot(spark, root).groupBy("g")
+        .agg(count(lit(1)).as("n"), sum("v").as("s"))
+      val preAgg = time(s"rollup recompute, pre-state ($label)")(rollup.localCheckpoint(true))
+      val vNext = time(s"updateWhere with changeFeed ($label)") {
+        Warehouse.updateWhere(spark, root, col("id") % 5000 === 3,
+          Map("v" -> (col("v") + 5)), changeFeed = true)
+      }
+      time(s"IVM maintainFromWarehouse ($label)") {
+        Ivm.maintainFromWarehouse(preAgg, root, Seq("g"), vNext, vNext, Map("s" -> "v"), "n").count()
+      }
+      time(s"rollup full recompute reference ($label)")(rollup.count())
     }
     }
     spark.stop()

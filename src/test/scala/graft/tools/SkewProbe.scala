@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.functions._
 
 /** r17 (VERDICT r16 #6): EMPIRICAL skew evidence for the two hot-key
@@ -25,18 +24,12 @@ import org.apache.spark.sql.functions._
 object SkewProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "1000000")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
 
     def partShares(df: org.apache.spark.sql.DataFrame, key: Seq[String],
                    label: String): Unit = {
-      val parts = df.repartition(32, key.map(col): _*)
+      val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val parts = df.repartition(n, key.map(col): _*)
         .groupBy(spark_partition_id().as("p")).count()
         .collect().map(_.getLong(1)).sorted
       if (parts.isEmpty) { println(s"[skew] $label: empty"); return }
